@@ -12,6 +12,13 @@ Caching/invalidation follows the layer's rules
 change (load() is the rebuild), re-query per call; the node table is
 persisted and partitioned by zoom so each query prunes 17/18 levels.
 
+Per-request work is one predicate: the finalized cluster view
+(`gc.finalize_clusters` over the node table) is planned once per
+hierarchy generation, on the first read after it, and every
+get_clusters / get_children call adds a single `where` to it. `load`,
+`append` and `unload` replace the node table and drop the view; nothing
+else does.
+
 Cluster identity: grid nodes are identified by (zoom, cell_x, cell_y);
 the reference's (origin<<5)+zoom+count bit packing is carried by the
 greedy pipeline (operators/greedy.py), with the codec itself covered by
@@ -45,8 +52,10 @@ class ArrowClusterEngine:
         self.opts = opts
         self.workdir = workdir or tempfile.mkdtemp(prefix="arrow_supercluster_")
         self._nodes: Optional[DataFrame] = None
+        self._view: Optional[DataFrame] = None
         self._points: Optional[DataFrame] = None
         self._indexed_count: Optional[int] = None
+        self._generation = 0
 
     # -- §3.1 load -------------------------------------------------------
 
@@ -61,6 +70,7 @@ class ArrowClusterEngine:
         self._nodes = gc.materialize_hierarchy(
             pts, f"{self.workdir}/hierarchy", self.opts, prepared=True
         )
+        self._view = None
         self._indexed_count = None
         return self
 
@@ -68,6 +78,14 @@ class ArrowClusterEngine:
         if self._nodes is None:
             raise RuntimeError("call load() first")  # engine.ts throws similarly pre-load
         return self._nodes
+
+    def _cluster_view(self) -> DataFrame:
+        """The finalized node view of the current generation, built on
+        first use (so an unsupported `min_points` raises at query time,
+        not at load)."""
+        if self._view is None:
+            self._view = gc.finalize_clusters(self._require(), self.opts)
+        return self._view
 
     def append(self, points: DataFrame) -> "ArrowClusterEngine":
         """Incremental refresh: aggregate ONLY the new points to leaf
@@ -87,9 +105,10 @@ class ArrowClusterEngine:
             F.col("zoom") == self.opts.leaf_zoom
         ).select(*new_leaf.columns)
         merged = gc.merge_leaf_aggregates(old_leaf, new_leaf, self.opts)
-        self._generation = getattr(self, "_generation", 0) + 1
+        self._generation += 1
         path = f"{self.workdir}/hierarchy_gen{self._generation}"
         self._nodes = gc.materialize_from_leaf(merged, path, self.opts)
+        self._view = None
         self._points = (
             self._points.unionByName(pts) if self._points is not None else pts
         )
@@ -113,25 +132,24 @@ class ArrowClusterEngine:
         return max(self.opts.min_zoom, min(int(zoom), self.opts.max_zoom + 1))
 
     def get_clusters(self, bbox, zoom: int) -> DataFrame:
-        """Q1: bbox+zoom → ClusterOutput-shaped DataFrame. Partition
-        pruning on zoom, then bbox on output positions (antimeridian
-        handled inside bbox_predicate as an OR of ranges)."""
+        """Q1: bbox+zoom → ClusterOutput-shaped DataFrame. One `where` on
+        the generation's memoized cluster view: the zoom term prunes the
+        scan to one partition, the bbox term applies to output positions
+        (antimeridian handled inside bbox_predicate as an OR of ranges)."""
         z = self._limit_zoom(zoom)
-        nodes = self._require().filter(F.col("zoom") == z)
-        out = gc.finalize_clusters(nodes, self.opts)
-        return out.filter(bbox_predicate(*bbox))
+        return self._cluster_view().where(
+            (F.col("zoom") == z) & bbox_predicate(*bbox)
+        )
 
     # -- §3.3 drill-down -------------------------------------------------
 
     def get_children(self, zoom: int, cell_x: int, cell_y: int) -> DataFrame:
-        """Q2: nodes at zoom+1 whose cell>>1 equals the given cell."""
-        nodes = self._require().filter(F.col("zoom") == zoom + 1)
-        return gc.finalize_clusters(
-            nodes.filter(
-                (F.floor(F.col("cell_x") / 2) == cell_x)
-                & (F.floor(F.col("cell_y") / 2) == cell_y)
-            ),
-            self.opts,
+        """Q2: nodes at zoom+1 whose cell>>1 equals the given cell (an
+        arithmetic shift is floor division by 2, exact on longs)."""
+        return self._cluster_view().where(
+            (F.col("zoom") == zoom + 1)
+            & (F.shiftright("cell_x", 1) == cell_x)
+            & (F.shiftright("cell_y", 1) == cell_y)
         )
 
     def get_leaves(
@@ -182,56 +200,52 @@ class ArrowClusterEngine:
 
     def get_cluster_expansion_zoom(self, zoom: int, cell_x: int, cell_y: int) -> int:
         """Q4 (arrow-cluster-engine.ts:240-256): first zoom > `zoom` where
-        the node splits into >1 child. Single-pass union form (one job, one
-        collect): the follow-the-single-child walk is equivalent to "first
-        zoom whose descendant-cell count under the anchor exceeds 1" —
-        while the chain is single, the descendant count IS 1. Descendancy
-        is a shiftright of the (non-negative) cell coords, so each branch
-        is a partition-pruned filter + count; no per-level driver trips.
-        The count sequence is monotone over zoom for a nonempty anchor, so
-        "first ≠ 1" (which also catches a nonexistent anchor cell: all
-        counts 0 → returns zoom+1, like the walk) matches the reference."""
-        nodes = self._require()
-        parts = []
-        for z in range(zoom + 1, self.opts.max_zoom + 2):
-            shift = z - zoom
-            parts.append(
-                nodes.filter(F.col("zoom") == z)
-                .filter(
-                    (F.shiftright(F.col("cell_x"), shift) == cell_x)
-                    & (F.shiftright(F.col("cell_y"), shift) == cell_y)
-                )
-                .agg(
-                    F.lit(z).alias("z"),
-                    F.count(F.lit(1)).alias("n_children"),
-                )
-            )
-        splits = parts[0]
-        for p in parts[1:]:
-            splits = splits.unionByName(p)
-        row = (
-            splits.filter(F.col("n_children") != 1)
-            .agg(F.min("z").alias("ez"))
-            .collect()[0]
+        the node splits into >1 child. One grouped aggregate, one collect:
+        the follow-the-single-child walk is equivalent to "first zoom whose
+        descendant-cell count under the anchor is not 1" — while the chain
+        is single, the descendant count IS 1. Descendancy is a shiftright
+        of the cell coords by the zoom difference, so every zoom below the
+        anchor is counted in one scan. The count sequence is monotone over
+        zoom for a nonempty anchor, so "first ≠ 1" matches the reference.
+        A nonexistent anchor cell has no descendants at any zoom; the
+        missing groups read as 0, so it returns zoom+1, like the walk."""
+        counts = dict(
+            self._require()
+            .where((F.col("zoom") > zoom) & _under(zoom, cell_x, cell_y))
+            .groupBy("zoom")
+            .count()
+            .collect()
         )
-        return int(row["ez"]) if row["ez"] is not None else self.opts.max_zoom + 1
+        for z in range(zoom + 1, self.opts.max_zoom + 2):
+            if counts.get(z, 0) != 1:
+                return z
+        return self.opts.max_zoom + 1
 
     def get_descendants(self, zoom: int, cell_x: int, cell_y: int, max_depth_zoom: int) -> DataFrame:
         """J2: all nodes under (zoom,cell) down to max_depth_zoom —
         closed-form ancestor test, no recursion."""
-        nodes = self._require().filter(
-            (F.col("zoom") > zoom) & (F.col("zoom") <= max_depth_zoom)
-        )
-        shift = F.pow(F.lit(2.0), F.col("zoom") - zoom)
-        return nodes.filter(
-            (F.floor(F.col("cell_x") / shift) == cell_x)
-            & (F.floor(F.col("cell_y") / shift) == cell_y)
+        return self._require().where(
+            (F.col("zoom") > zoom)
+            & (F.col("zoom") <= max_depth_zoom)
+            & _under(zoom, cell_x, cell_y)
         )
 
     def unload(self) -> None:
         self._nodes = None
+        self._view = None
         self._points = None
         self._indexed_count = None
+
+
+def _under(zoom: int, cell_x: int, cell_y: int):
+    """Node rows at deeper zooms whose ancestor at `zoom` is the given cell:
+    the ancestor cell is the node's cell shifted right by the zoom
+    difference (arithmetic shift = floor division by 2^k, exact on longs)."""
+    shift = F.col("zoom") - F.lit(zoom)
+    return (
+        (F.call_function("shiftright", F.col("cell_x"), shift) == cell_x)
+        & (F.call_function("shiftright", F.col("cell_y"), shift) == cell_y)
+    )
 
 
 class GreedyClusterEngine:

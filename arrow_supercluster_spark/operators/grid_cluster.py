@@ -100,23 +100,41 @@ def cluster_grid(
     return cell_agg(with_cells(pts, zoom, opts), zoom)
 
 
-def rollup_level(child: DataFrame, zoom: int) -> DataFrame:
-    """Nodes at `zoom` from nodes at `zoom+1`: parent cell = child cell >> 1
-    (exact — see module docstring); sums/counts/mins aggregate exactly."""
+def _rollup_aggs() -> list:
+    """The node merge algebra: counts and coordinate sums add, mins take
+    the min. Rolling child nodes up to a parent and merging two leaf
+    tables are both this aggregation."""
+    return [
+        F.sum("num_points").alias("num_points"),
+        F.sum("sum_x").alias("sum_x"),
+        F.sum("sum_y").alias("sum_y"),
+        F.min("min_id").alias("min_id"),
+        F.min("min_lng").alias("min_lng"),
+        F.min("min_lat").alias("min_lat"),
+    ]
+
+
+def _upper_levels(leaf: DataFrame, opts: ClusterOptions) -> DataFrame:
+    """Levels min_zoom..max_zoom derived from the leaf nodes in one
+    aggregation: the leaf table is the compressed representation (one row
+    per occupied cell), and cell_z = floor(cell_leaf / 2^(leaf_zoom − z))
+    exactly (nested floor identity), so a zoom-range cross join + one hash
+    aggregation replaces 17 sequential rollup jobs. Shuffle volume =
+    |leaf| × levels, independent of raw point count."""
+    zooms = leaf.sparkSession.range(opts.min_zoom, opts.max_zoom + 1).select(
+        F.col("id").cast("int").alias("zoom")
+    )
+    shift = F.pow(F.lit(2.0), F.lit(opts.leaf_zoom) - F.col("zoom"))
     return (
-        child.groupBy(
-            F.floor(F.col("cell_x") / 2).alias("cell_x"),
-            F.floor(F.col("cell_y") / 2).alias("cell_y"),
+        leaf.drop("zoom")
+        .crossJoin(F.broadcast(zooms))
+        .groupBy(
+            "zoom",
+            F.floor(F.col("cell_x") / shift).alias("cell_x"),
+            F.floor(F.col("cell_y") / shift).alias("cell_y"),
         )
-        .agg(
-            F.sum("num_points").alias("num_points"),
-            F.sum("sum_x").alias("sum_x"),
-            F.sum("sum_y").alias("sum_y"),
-            F.min("min_id").alias("min_id"),
-            F.min("min_lng").alias("min_lng"),
-            F.min("min_lat").alias("min_lat"),
-        )
-        .select(F.lit(zoom).alias("zoom"), *[c for c in NODE_COLS if c != "zoom"])
+        .agg(*_rollup_aggs())
+        .select(*NODE_COLS)
     )
 
 
@@ -145,29 +163,7 @@ def cluster_hierarchy(
     leaf = truncate(
         cell_agg(with_cells(pts, opts.leaf_zoom, opts), opts.leaf_zoom)
     )
-    spark = leaf.sparkSession
-    zooms = spark.range(opts.min_zoom, opts.max_zoom + 1).select(
-        F.col("id").cast("int").alias("zoom")
-    )
-    shift = F.pow(F.lit(2.0), F.lit(opts.leaf_zoom) - F.col("zoom"))
-    upper = (
-        leaf.drop("zoom")
-        .crossJoin(F.broadcast(zooms))
-        .groupBy(
-            "zoom",
-            F.floor(F.col("cell_x") / shift).alias("cell_x"),
-            F.floor(F.col("cell_y") / shift).alias("cell_y"),
-        )
-        .agg(
-            F.sum("num_points").alias("num_points"),
-            F.sum("sum_x").alias("sum_x"),
-            F.sum("sum_y").alias("sum_y"),
-            F.min("min_id").alias("min_id"),
-            F.min("min_lng").alias("min_lng"),
-            F.min("min_lat").alias("min_lat"),
-        )
-        .select(*NODE_COLS)
-    )
+    upper = _upper_levels(leaf, opts)
     return leaf.select(*NODE_COLS).unionByName(upper).repartition("zoom")
 
 
@@ -201,14 +197,7 @@ def merge_leaf_aggregates(a: DataFrame, b: DataFrame, opts: ClusterOptions = DEF
     return (
         a.unionByName(b)
         .groupBy("cell_x", "cell_y")
-        .agg(
-            F.sum("num_points").alias("num_points"),
-            F.sum("sum_x").alias("sum_x"),
-            F.sum("sum_y").alias("sum_y"),
-            F.min("min_id").alias("min_id"),
-            F.min("min_lng").alias("min_lng"),
-            F.min("min_lat").alias("min_lat"),
-        )
+        .agg(*_rollup_aggs())
         .select(
             F.lit(opts.leaf_zoom).alias("zoom"),
             *[c for c in NODE_COLS if c != "zoom"],
@@ -237,39 +226,12 @@ def materialize_from_leaf(
     # coalescing already sizes those tasks toward the advisory target).
     leaf.write.mode("overwrite").partitionBy("zoom").parquet(path)
 
-    # Derive ALL upper levels from the leaf aggregates in one job: the leaf
-    # table is the compressed representation (one row per occupied cell),
-    # and cell_z = floor(cell_leaf / 2^(leaf_zoom − z)) exactly (nested
-    # floor identity), so a zoom-range cross join + one hash aggregation
-    # replaces 17 sequential rollup jobs. Shuffle volume = |leaf| × levels,
-    # independent of raw point count.
-    # explicit schema on read-back: an EMPTY input writes a partitioned
+    # Derive ALL upper levels from the leaf aggregates in one job.
+    # Explicit schema on read-back: an EMPTY input writes a partitioned
     # dir with no part files, and schema inference would throw
     # UNABLE_TO_INFER_SCHEMA (the reference engine accepts empty tables,
     # edge-cases.test.ts:13-20); zoom stays a partition column for pruning
-    leaf_df = spark.read.schema(leaf.schema).parquet(path)
-    zooms = spark.range(opts.min_zoom, opts.max_zoom + 1).select(
-        F.col("id").cast("int").alias("zoom")
-    )
-    shift = F.pow(F.lit(2.0), F.lit(opts.leaf_zoom) - F.col("zoom"))
-    upper = (
-        leaf_df.drop("zoom")
-        .crossJoin(F.broadcast(zooms))
-        .groupBy(
-            "zoom",
-            F.floor(F.col("cell_x") / shift).alias("cell_x"),
-            F.floor(F.col("cell_y") / shift).alias("cell_y"),
-        )
-        .agg(
-            F.sum("num_points").alias("num_points"),
-            F.sum("sum_x").alias("sum_x"),
-            F.sum("sum_y").alias("sum_y"),
-            F.min("min_id").alias("min_id"),
-            F.min("min_lng").alias("min_lng"),
-            F.min("min_lat").alias("min_lat"),
-        )
-        .select(*NODE_COLS)
-    )
+    upper = _upper_levels(spark.read.schema(leaf.schema).parquet(path), opts)
     # The UPPER write keeps the rebalance node, keyed (zoom, 8-way cell
     # bucket) instead of zoom alone (guide §6 output sizing): at 100 TB
     # the rebalance still splits oversized partitions into advisory-sized

@@ -37,8 +37,9 @@ ALLOWLIST: dict[str, str] = {
     "engine.py::indexed_point_count":
         "1-row global count agg",
     "engine.py::get_cluster_expansion_zoom":
-        "per-cluster readout: <= 1 row per requested cluster id, plus a "
-        "1-row hierarchy-depth agg",
+        "per-cluster readout: <= 1 row per requested cluster id "
+        "(greedy engine); per-zoom descendant counts of one anchor cell, "
+        "<= 1 row per zoom below it (grid engine)",
     "engine.py::get_clusters":
         "user-facing engine API contract (reference getClusters returns "
         "an array): rows bounded by the viewport/zoom result the caller "
