@@ -425,6 +425,38 @@ def connected_components(
     return labels.select(F.col("node").alias("node_id"), F.col("comp").alias("component_id"))
 
 
+def local_cc_labels(u, v):
+    """Exact min-id connected components of an in-memory edge list (two
+    equal-length integer sequences of endpoints): union-find with path
+    halving, each root kept at its component's smallest member. Returns
+    a pandas (node_id, component_id) frame, one row per endpoint."""
+    import numpy as np
+    import pandas as pd
+
+    parent: dict = {}
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
+
+    for x, y in zip(
+        np.asarray(u, dtype=np.int64).tolist(), np.asarray(v, dtype=np.int64).tolist()
+    ):
+        parent.setdefault(x, x)
+        parent.setdefault(y, y)
+        rx, ry = find(x), find(y)
+        if rx != ry:
+            if rx < ry:
+                parent[ry] = rx
+            else:
+                parent[rx] = ry
+    nodes = np.fromiter(parent.keys(), dtype=np.int64, count=len(parent))
+    comps = np.fromiter((find(n) for n in parent), dtype=np.int64, count=len(parent))
+    return pd.DataFrame({"node_id": nodes, "component_id": comps})
+
+
 def connected_components_adaptive(
     pairs: DataFrame,
     a: str = "a_id",
@@ -435,34 +467,21 @@ def connected_components_adaptive(
     list fits comfortably on the driver (≤ small_threshold edges), a
     local union-find labels it in microseconds instead of a multi-round
     distributed fixpoint (each round = 3 shuffles + 2 jobs). The caller
-    doesn't know the size in advance — count first (cheap: edges are two
-    longs), then pick. At 100 TB the dup-graph edge lists that reach this
-    operator are already contracted (LSH buckets, coarse cluster levels),
-    so the fast path fires exactly when the fixpoint overhead would
-    dominate; genuinely large graphs still take the distributed path."""
-    n = pairs.count()
-    if n > small_threshold:
+    doesn't know the size in advance — one bounded probe collects at
+    most small_threshold + 1 edges (cheap: edges are two longs) and
+    picks the path from what came back. At 100 TB the dup-graph edge
+    lists that reach this operator are already contracted (LSH buckets,
+    coarse cluster levels), so the fast path fires exactly when the
+    fixpoint overhead would dominate; genuinely large graphs still take
+    the distributed path."""
+    rows = (
+        pairs.select(F.col(a).cast("long"), F.col(b).cast("long"))
+        .limit(small_threshold + 1)
+        .collect()
+    )
+    if len(rows) > small_threshold:
         return connected_components(pairs, a, b)
-    spark = pairs.sparkSession
-    rows = pairs.select(F.col(a).cast("long"), F.col(b).cast("long")).collect()
-    parent: dict = {}
-
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]  # path halving
-            x = parent[x]
-        return x
-
-    for u, v in rows:
-        parent.setdefault(u, u)
-        parent.setdefault(v, v)
-        ru, rv = find(u), find(v)
-        if ru != rv:
-            if ru < rv:
-                parent[rv] = ru
-            else:
-                parent[ru] = rv
-    labels = [(node, find(node)) for node in parent]
-    return spark.createDataFrame(
+    labels = local_cc_labels([r[0] for r in rows], [r[1] for r in rows])
+    return pairs.sparkSession.createDataFrame(
         labels, "node_id long, component_id long"
     )

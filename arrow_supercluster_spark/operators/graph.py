@@ -1,23 +1,81 @@
-"""Graph operators beyond connected components (dedup.py): PageRank.
+"""Graph operators beyond connected components (dedup.py): the user
+co-occurrence graph, PageRank (optionally with a restart set), Katz,
+eigenvector centrality, HITS, triangles and label propagation.
 
-Public algorithm (Brin & Page 1998), expressed relationally: rank
-iteration = one join + one aggregate per round, driver-controlled like
-the zoom recursion (SURVEY §3.1) and the components loop (dedup.py).
+Public algorithms (Brin & Page 1998; Katz 1953; Kleinberg 1999),
+expressed relationally: each round = one join + one aggregate,
+driver-controlled like the zoom recursion (SURVEY §3.1) and the
+components loop (dedup.py).
 
 Scale shape (100 TB of edges):
-- edges shuffle ONCE per iteration keyed by destination; ranks are
+- edges shuffle ONCE per iteration keyed by the summing end; scores are
   |nodes| rows (small side → broadcastable when nodes ≪ edges);
-- per-iteration results are localCheckpointed so the lineage stays
-  O(1) instead of O(iterations) — the same discipline as the zoom loop;
-- ranks round to 9 decimals each iteration: double summation order is
-  partition-dependent, and without re-rounding the drift compounds
-  across iterations (the cross-engine parity rationale of
-  plans/registry.py's float discipline).
+- each operator materializes its edge list and node set once, and every
+  round's scores are checkpointed, so the lineage stays O(1) instead of
+  O(iterations) — the same discipline as the zoom loop;
+- PageRank and HITS round scores to 9 decimals each round: double
+  summation order is partition-dependent, and without re-rounding the
+  drift compounds across iterations (the cross-engine parity rationale
+  of plans/registry.py's float discipline). Katz and eigenvector
+  centrality round only their output, as their SQL twins do.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from typing import Optional
+
+from pyspark.sql import Column, DataFrame, functions as F
+
+from arrow_supercluster_spark.functions.checkpoint import truncate
+
+# The SQL twin of cooccurrence_edges, as one `edges (src, dst)` CTE.
+COOCCURRENCE_EDGES_SQL = """
+    edges AS (
+      SELECT DISTINCT a.user_id AS src, b.user_id AS dst
+      FROM events a JOIN events b
+        ON a.event_type = b.event_type
+       AND date_trunc('hour', a.ts) = date_trunc('hour', b.ts)
+       AND a.user_id <> b.user_id
+    )"""
+
+
+def cooccurrence_edges(events: DataFrame) -> DataFrame:
+    """The user co-occurrence graph over `read_events` output: a
+    directed edge (src, dst) for every ordered pair of distinct users
+    who share an event type in the same hour. Distinct rows, so each
+    undirected link appears once per direction."""
+    ev = events.select(
+        "user_id", "event_type", F.date_trunc("hour", "ts").alias("h")
+    )
+    a = ev.select(F.col("user_id").alias("src"), "event_type", "h")
+    b = ev.select(F.col("user_id").alias("dst"), "event_type", "h")
+    return (
+        a.join(b, ["event_type", "h"])
+        .filter(F.col("src") != F.col("dst"))
+        .select("src", "dst")
+        .distinct()
+    )
+
+
+def mutual_knn_edges(emb: DataFrame, k: int) -> DataFrame:
+    """Undirected mutual k-NN edges as BOTH directed rows (u,v) and
+    (v,u) — the adjacency the matrix-vector product needs."""
+    from arrow_supercluster_spark.operators.similarity import (
+        knn_edges_exact,
+    )
+
+    ed = knn_edges_exact(emb, k)
+    rev = ed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    return ed.intersect(rev)  # a->b kept iff b->a also present
+
+
+def node_set(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+    """(node) — the distinct endpoints of an edge list."""
+    return (
+        edges.select(F.col(src).alias("node"))
+        .union(edges.select(F.col(dst).alias("node")))
+        .distinct()
+    )
 
 
 def pagerank(
@@ -26,10 +84,18 @@ def pagerank(
     dst: str = "dst",
     iterations: int = 3,
     damping: float = 0.85,
+    restart: Optional[Column] = None,
 ) -> DataFrame:
     """PageRank over a directed edge list, fixed iteration count.
     Simplified dangling treatment (their mass is dropped, the common
-    relational variant); uniform init 1/N. Returns (node, rank).
+    relational variant). Returns (node, rank), ranks rounded to 6.
+
+    Without `restart`, every node starts at 1/N and receives the
+    teleport term (1−d)/N. With `restart` — a boolean Column over
+    `node` selecting the restart set S — the walk is personalized: the
+    nodes of S start at 1/|S| and receive (1−d)·(1/|S|), every other
+    node starts at and receives 0. A restart set that matches no node
+    raises ValueError.
 
     r10: the edge list, node set and degree table are materialized ONCE
     (eager truncate) — callers pass expensive lineages (the
@@ -38,22 +104,26 @@ def pagerank(
     12.5 s → ~4 s for q_pagerank at sf0.1).  Materializing the edge
     table before iterating is also the 100 TB-correct shape: each round
     then reads a stored table instead of re-shuffling the derivation."""
-    from arrow_supercluster_spark.functions.checkpoint import truncate
-
     edges = truncate(edges.select(F.col(src).alias(src), F.col(dst).alias(dst)))
-    nodes = truncate(
-        edges.select(F.col(src).alias("node"))
-        .union(edges.select(F.col(dst).alias("node")))
-        .distinct()
-    )
-    n = nodes.count()
-    if n == 0:
-        # empty graph (e.g. a co-occurrence window that matched nothing)
-        # → empty rank table, not a ZeroDivisionError at plan build
-        return nodes.select("node", F.lit(0.0).alias("rank")).limit(0)
+    nodes = truncate(node_set(edges, src, dst))
+    if restart is None:
+        n = nodes.count()
+        if n == 0:
+            # empty graph (e.g. a co-occurrence window that matched nothing)
+            # → empty rank table, not a ZeroDivisionError at plan build
+            return nodes.select("node", F.lit(0.0).alias("rank")).limit(0)
+        init = F.lit(1.0 / n)
+        base = F.lit((1.0 - damping) / n)
+    else:
+        ns = nodes.filter(restart).count()
+        if ns == 0:
+            raise ValueError("pagerank: the restart set matches no node of the graph")
+        init = F.when(restart, F.lit(1.0 / ns)).otherwise(F.lit(0.0))
+        base = F.when(restart, F.lit((1.0 - damping) * (1.0 / ns))).otherwise(
+            F.lit(0.0)
+        )
     deg = truncate(edges.groupBy(src).agg(F.count(F.lit(1)).alias("deg")))
-    ranks = nodes.select("node", F.round(F.lit(1.0 / n), 9).alias("rank"))
-    base = (1.0 - damping) / n
+    ranks = nodes.select("node", F.round(init, 9).alias("rank"))
     for _ in range(iterations):
         contribs = (
             edges.join(deg, src)
@@ -73,6 +143,143 @@ def pagerank(
             .localCheckpoint(eager=False)
         )
     return ranks.select("node", F.round("rank", 6).alias("rank"))
+
+
+def pagerank_sql(
+    iterations: int = 3, damping: float = 0.85, restart: Optional[str] = None
+) -> str:
+    """SQL twin of `pagerank`, as CTE text over an `edges (src, dst)` CTE
+    the caller defines: nodes, nstat, deg, r0 and the unrolled rounds
+    r1..r{iterations}. The caller selects from r{iterations} and rounds
+    to 6. `restart` is the restart set as a SQL predicate over `node`."""
+    d = f"CAST({damping} AS DOUBLE)"
+    if restart is None:
+        nstat = "SELECT COUNT(*) AS n FROM nodes"
+        init = "CAST(1.0 AS DOUBLE) / nstat.n"
+        base = f"(CAST(1.0 AS DOUBLE) - {d}) / nstat.n"
+    else:
+        nstat = f"SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes WHERE {restart}"
+        init = (
+            f"CASE WHEN {restart} THEN CAST(1.0 AS DOUBLE) / nstat.n"
+            " ELSE CAST(0.0 AS DOUBLE) END"
+        )
+        base = f"(CAST(1.0 AS DOUBLE) - {d}) * {init}"
+    rounds = "".join(
+        f""",
+    r{i + 1} AS (
+      SELECT nodes.node,
+             round({base}
+                   + {d} * coalesce(c.inflow, 0.0), 9) AS rank
+      FROM nodes CROSS JOIN nstat
+      LEFT JOIN (
+        SELECT e.dst AS node, SUM(r.rank / d.deg) AS inflow
+        FROM edges e JOIN deg d ON d.src = e.src
+                     JOIN r{i} r ON r.node = e.src
+        GROUP BY e.dst
+      ) c USING (node)
+    )"""
+        for i in range(iterations)
+    )
+    return f"""
+    nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
+    nstat AS ({nstat}),
+    deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src),
+    r0 AS (
+      SELECT node, round({init}, 9) AS rank
+      FROM nodes CROSS JOIN nstat
+    ){rounds}"""
+
+
+def _neighbour_sum(
+    edges: DataFrame, nodes: DataFrame, scores: DataFrame, node_end: str
+) -> DataFrame:
+    """(node, s): for every node, the sum of its neighbours' `score`
+    along the edges (src, dst) whose `node_end` end is the node — s is
+    (A·x)(node) for node_end="src", (Aᵀ·x)(node) for node_end="dst".
+    A node with no such edge gets 0."""
+    far = "dst" if node_end == "src" else "src"
+    msg = (
+        edges.join(scores.select(F.col("node").alias(far), "score"), far)
+        .groupBy(F.col(node_end).alias("node"))
+        .agg(F.sum("score").alias("s"))
+    )
+    return nodes.join(msg, "node", "left").select(
+        "node", F.coalesce(F.col("s"), F.lit(0.0)).alias("s")
+    )
+
+
+def _l2_normalise(sums: DataFrame, digits: Optional[int] = None) -> DataFrame:
+    """(node, score) = s / ‖s‖₂, 0 everywhere when the norm is 0. With
+    `digits`, the norm and each score round to that many decimals."""
+
+    def rnd(c: Column) -> Column:
+        return c if digits is None else F.round(c, digits)
+
+    nrm = sums.agg(rnd(F.sqrt(F.sum(F.col("s") * F.col("s")))).alias("nrm"))
+    return sums.crossJoin(F.broadcast(nrm)).select(
+        "node",
+        F.when(F.col("nrm") > 0, rnd(F.col("s") / F.col("nrm")))
+        .otherwise(F.lit(0.0))
+        .alias("score"),
+    )
+
+
+def _power_iteration(
+    edges: DataFrame, nodes: DataFrame, iterations: int, step
+) -> DataFrame:
+    """x⁰ = 1 over `nodes`, xᵗ⁺¹ = step(A·xᵗ) over the symmetric edge
+    list; returns (node, score) after `iterations` rounds."""
+    edges = truncate(edges.select("src", "dst"))
+    nodes = truncate(nodes.select("node"))
+    x = nodes.select("node", F.lit(1.0).alias("score"))
+    for _ in range(iterations):
+        # eager cut per round: an uncut 12-round tree spends its time in
+        # planning, and the L2 norm reads the sums twice, so the plan
+        # would also double each round
+        x = truncate(step(_neighbour_sum(edges, nodes, x, "src")))
+    return x
+
+
+def katz(
+    edges: DataFrame, nodes: DataFrame, alpha: float, iterations: int
+) -> DataFrame:
+    """Katz centrality by truncated Neumann series: x⁰ = 1,
+    xᵗ⁺¹ = α·A·xᵗ + 1 for `iterations` rounds. `nodes` (node) may hold
+    isolated nodes; they stay at 1. Returns (node, score), unrounded."""
+    return _power_iteration(
+        edges,
+        nodes,
+        iterations,
+        lambda s: s.select("node", (alpha * F.col("s") + 1.0).alias("score")),
+    )
+
+
+def eigenvector_centrality(
+    edges: DataFrame, nodes: DataFrame, iterations: int
+) -> DataFrame:
+    """Power iteration for the principal eigenvector: x⁰ = 1,
+    xᵗ⁺¹ = A·xᵗ / ‖A·xᵗ‖₂ for `iterations` rounds. Isolated nodes stay
+    exactly 0. Returns (node, score), unrounded."""
+    return _power_iteration(edges, nodes, iterations, _l2_normalise)
+
+
+def hits(edges: DataFrame, iterations: int) -> DataFrame:
+    """HITS hubs and authorities (Kleinberg 1999) over a directed edge
+    list (src, dst), from hub = authority = 1: each round, authority =
+    L2-normalised in-link hub sum, then hub = L2-normalised out-link
+    authority sum, every norm and score rounded to 9. Returns
+    (node, hub, authority)."""
+    edges = truncate(edges.select("src", "dst"))
+    nodes = truncate(node_set(edges))
+    hub = auth = nodes.select("node", F.lit(1.0).alias("score"))
+    for _ in range(iterations):
+        auth = _l2_normalise(_neighbour_sum(edges, nodes, hub, "dst"), 9)
+        auth = auth.localCheckpoint(eager=False)
+        hub = _l2_normalise(_neighbour_sum(edges, nodes, auth, "src"), 9)
+        hub = hub.localCheckpoint(eager=False)
+    return hub.select("node", F.col("score").alias("hub")).join(
+        auth.select("node", F.col("score").alias("authority")), "node"
+    )
 
 
 def undirected_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -116,16 +323,10 @@ def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
     """
     und = undirected_edges(edges, src, dst)
     # bounded probe: scans until cap+1 distinct nodes, one small collect
-    node_rows = (
-        und.select(F.col("u").alias("n"))
-        .unionAll(und.select(F.col("v").alias("n")))
-        .distinct()
-        .limit(_TRI_BITSET_MAX_NODES + 1)
-        .collect()
-    )
+    node_rows = node_set(und, "u", "v").limit(_TRI_BITSET_MAX_NODES + 1).collect()
     if len(node_rows) <= _TRI_BITSET_MAX_NODES:
         return _triangle_counts_bitset(
-            und, sorted(r.n for r in node_rows)
+            und, sorted(r.node for r in node_rows)
         )
     return _triangle_counts_oriented(und)
 
@@ -210,8 +411,6 @@ def _triangle_counts_bitset(und: DataFrame, ids: list) -> DataFrame:
 
 def _triangle_counts_oriented(und: DataFrame) -> DataFrame:
     """Any-scale relational path: degree-oriented wedge enumeration."""
-    from arrow_supercluster_spark.functions.checkpoint import truncate
-
     deg = (
         und.select(F.col("u").alias("n"))
         .unionAll(und.select(F.col("v").alias("n")))
@@ -276,18 +475,12 @@ def label_propagation(
     """
     from pyspark.sql import Window
 
-    from arrow_supercluster_spark.functions.checkpoint import truncate
-
     # r10: materialize the caller's edge lineage once — each of the 3
     # rounds re-joined `e`, whose unmaterialized lineage (typically the
     # co-occurrence self-join) re-ran per round (8.9 s → ~3 s for
     # q_label_prop at sf0.1).
     e = truncate(edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst")))
-    nodes = (
-        e.select(F.col("e_src").alias("node"))
-        .unionByName(e.select(F.col("e_dst").alias("node")))
-        .distinct()
-    )
+    nodes = node_set(e, "e_src", "e_dst")
     labels = nodes.withColumn("label", F.col("node"))
     w = Window.partitionBy("e_src").orderBy(F.col("c").desc(), F.col("label"))
     for _ in range(iterations):

@@ -640,34 +640,6 @@ def _cc_edge_plan(cur, bin_r: float):
     )
 
 
-def _local_cc_labels_pd(e_pd: pd.DataFrame) -> pd.DataFrame:
-    """Union-find (path halving) over a collected edge frame →
-    (node_id, component_id) pandas frame, component_id = min member."""
-    parent: dict = {}
-
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for u, v in zip(
-        e_pd["a_id"].to_numpy(dtype="int64"), e_pd["b_id"].to_numpy(dtype="int64")
-    ):
-        u, v = int(u), int(v)
-        parent.setdefault(u, u)
-        parent.setdefault(v, v)
-        ru, rv = find(u), find(v)
-        if ru != rv:
-            if ru < rv:
-                parent[rv] = ru
-            else:
-                parent[ru] = rv
-    nodes = np.fromiter(parent.keys(), dtype=np.int64, count=len(parent))
-    comps = np.fromiter((find(int(n)) for n in nodes), dtype=np.int64, count=len(nodes))
-    return pd.DataFrame({"node_id": nodes, "component_id": comps})
-
-
 def _rank_step_fn(comp_nodes: np.ndarray, key_e0: np.ndarray):
     """The closed-form dense re-rank's step function (round-4 greedy-cc
     cost pass): given the current level's idx dense 0..n-1, the next
@@ -700,6 +672,7 @@ def greedy_hierarchy_cc(points, opts: ClusterOptions = DEFAULT_OPTIONS, mask=Non
     from arrow_supercluster_spark.functions.projection import fround, lat_y, lng_x
     from arrow_supercluster_spark.operators.dedup import (
         connected_components_adaptive,
+        local_cc_labels,
     )
     from arrow_supercluster_spark.operators.filters import drop_null_geometry
 
@@ -847,7 +820,7 @@ def greedy_hierarchy_cc(points, opts: ClusterOptions = DEFAULT_OPTIONS, mask=Non
                 continue
             skip_until_r2 = None
             e_pd = e_sub
-            labels_pd = _local_cc_labels_pd(e_pd)
+            labels_pd = local_cc_labels(e_pd["a_id"], e_pd["b_id"])
             comp_of = dict(
                 zip(
                     labels_pd["node_id"].to_numpy(),

@@ -28,8 +28,6 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -46,10 +44,9 @@ from arrow_supercluster_spark.operators.filters import drop_null_geometry
 # materialize_from_leaf): a PARALLELISM key, not a size cap — AQE still
 # coalesces small buckets together and splits oversized ones to the
 # advisory size, so the value only bounds how many read tasks a
-# zoom-pruned scan gets at small scale.  Env-overridable for cluster
-# deployments (SPARK_GRAFT_WRITE_BUCKETS); the default suits both the
-# local bench and, at 100 TB, is dominated by advisory splitting anyway.
-_WRITE_BUCKETS = int(os.environ.get("SPARK_GRAFT_WRITE_BUCKETS", "8"))
+# zoom-pruned scan gets at small scale.  8 suits the local bench and, at
+# 100 TB, is dominated by advisory splitting anyway.
+_WRITE_BUCKETS = 8
 
 NODE_COLS = [
     "zoom", "cell_x", "cell_y", "num_points",

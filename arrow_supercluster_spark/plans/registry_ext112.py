@@ -7,9 +7,9 @@ graph-based keyword extraction:
   top-20 by PMI via TakeOrdered.
 - q_textrank_keywords: TextRank (Mihalcea & Tarau 2004) — PageRank over
   the undirected adjacent-token co-occurrence graph, reusing the graph
-  family's pagerank operator (operators/graph.py) and its unrolled-
-  iteration oracle CTEs (registry_ext14), with the token graph swapped
-  in for the user graph. Top-10 keywords by rank.
+  family's pagerank operator and its unrolled-iteration oracle CTEs
+  (operators/graph.py), with the token graph swapped in for the user
+  graph. Top-10 keywords by rank.
 """
 
 from __future__ import annotations
@@ -20,7 +20,6 @@ from arrow_supercluster_spark.operators import graph
 from arrow_supercluster_spark.operators.dedup import tokenize
 from arrow_supercluster_spark.plans.registry_core import register
 from arrow_supercluster_spark.plans.registry_ext import SQL_TOKS, _docs
-from arrow_supercluster_spark.plans.registry_ext14 import _pagerank_iter_sql
 
 _PMI_MIN = 5
 _PMI_K = 20
@@ -119,27 +118,16 @@ def q_collocations_pmi(spark, sf_dir):
     )
 
 
-_TR_SQL = (
-    f"""
+_TR_SQL = f"""
     WITH big AS ({_SQL_BIGRAMS}),
     edges AS (
       SELECT w1 AS src, w2 AS dst FROM big WHERE w1 <> w2
       UNION
       SELECT w2 AS src, w1 AS dst FROM big WHERE w1 <> w2
-    ),
-    nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-    nstat AS (SELECT COUNT(*) AS n FROM nodes),
-    deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src),
-    r0 AS (
-      SELECT node, round(CAST(1.0 AS DOUBLE) / nstat.n, 9) AS rank
-      FROM nodes CROSS JOIN nstat
-    ),"""
-    + ",".join(_pagerank_iter_sql(f"r{i}", f"r{i + 1}") for i in range(3))
-    + f"""
+    ),{graph.pagerank_sql(3, 0.85)}
     SELECT node AS word, round(rank, 6) AS rank FROM r3
     ORDER BY rank DESC, word LIMIT {_TR_K}
     """
-)
 
 
 @register("q_textrank_keywords", _TR_SQL)
@@ -148,7 +136,7 @@ def q_textrank_keywords(spark, sf_dir):
     operators/graph.pagerank, the exact machinery q_pagerank runs on
     the user graph) over the UNDIRECTED distinct adjacent-token
     co-occurrence graph; top-{k} words by rank. The oracle reuses
-    registry_ext14's unrolled-iteration CTEs verbatim with the token
+    graph.pagerank_sql's unrolled-iteration CTEs verbatim with the token
     edge list swapped in — one graph family, two domains.""".format(
         k=_TR_K
     )

@@ -95,43 +95,10 @@ def q_source_lang_kl(spark, sf_dir):
     )
 
 
-def _pagerank_iter_sql(prev: str, cur: str) -> str:
-    return f"""
-    {cur} AS (
-      SELECT nodes.node,
-             round((CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / nstat.n
-                   + CAST(0.85 AS DOUBLE) * coalesce(c.inflow, 0.0), 9) AS rank
-      FROM nodes CROSS JOIN nstat
-      LEFT JOIN (
-        SELECT e.dst AS node, SUM(r.rank / d.deg) AS inflow
-        FROM edges e JOIN deg d ON d.src = e.src
-                     JOIN {prev} r ON r.node = e.src
-        GROUP BY e.dst
-      ) c USING (node)
-    )"""
-
-
-_PR_SQL = (
-    """
-    WITH edges AS (
-      SELECT DISTINCT a.user_id AS src, b.user_id AS dst
-      FROM events a JOIN events b
-        ON a.event_type = b.event_type
-       AND date_trunc('hour', a.ts) = date_trunc('hour', b.ts)
-       AND a.user_id <> b.user_id
-    ),
-    nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-    nstat AS (SELECT COUNT(*) AS n FROM nodes),
-    deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src),
-    r0 AS (
-      SELECT node, round(CAST(1.0 AS DOUBLE) / nstat.n, 9) AS rank
-      FROM nodes CROSS JOIN nstat
-    ),"""
-    + ",".join(_pagerank_iter_sql(f"r{i}", f"r{i + 1}") for i in range(3))
-    + """
+_PR_SQL = f"""
+    WITH {graph.COOCCURRENCE_EDGES_SQL},{graph.pagerank_sql(3, 0.85)}
     SELECT node, round(rank, 6) AS rank FROM r3
     """
-)
 
 
 @register("q_pagerank", _PR_SQL)
@@ -144,17 +111,7 @@ def q_pagerank(spark, sf_dir):
     rounds as chained CTEs — differentially checking the whole
     iteration algebra. Ranks re-round to 9 each round so summation
     order can't compound drift across engines."""
-    ev = read_events(spark, sf_dir).select(
-        "user_id", "event_type", F.date_trunc("hour", "ts").alias("h")
-    )
-    a = ev.select(F.col("user_id").alias("src"), "event_type", "h")
-    b = ev.select(F.col("user_id").alias("dst"), "event_type", "h")
-    edges = (
-        a.join(b, ["event_type", "h"])
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
+    edges = graph.cooccurrence_edges(read_events(spark, sf_dir))
     return graph.pagerank(edges, iterations=3, damping=0.85)
 
 

@@ -41,6 +41,7 @@ import numpy as np
 
 from pyspark.sql import functions as F
 
+from arrow_supercluster_spark.operators import graph
 from arrow_supercluster_spark.plans.registry_core import register
 from arrow_supercluster_spark.plans.registry_ext import _emb
 from arrow_supercluster_spark.sources.tables import read_events
@@ -54,18 +55,6 @@ _JL_ITEMS = 40
 # ===========================================================================
 # R452 — Katz centrality (mutual 5-NN graph)
 # ===========================================================================
-
-def mutual_knn_edges(emb, k):
-    """Undirected mutual k-NN edges as BOTH directed rows (u,v) and
-    (v,u) — the adjacency the matrix-vector product needs."""
-    from arrow_supercluster_spark.operators.similarity import (
-        knn_edges_exact,
-    )
-
-    ed = knn_edges_exact(emb, k)
-    rev = ed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    return ed.intersect(rev)  # a->b kept iff b->a also present
-
 
 # Unrolled-CTE oracle (VERDICT r6 Next-round #4, the q_pagerank/q_hits
 # pattern): the SAME 12 iterations the Spark plan runs, generated by the
@@ -131,34 +120,14 @@ def q_katz_centrality(spark, sf_dir):
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
-    from arrow_supercluster_spark.functions.checkpoint import truncate
-
-    # r10: materialize edges/nodes once and checkpoint x per iteration —
-    # the old single 12-join-deep lazy tree spent most of its 23 s in
-    # Catalyst planning/stage compilation, not data (the graph is n·k
-    # rows); per-round truncate keeps every plan flat (the
-    # pagerank/label_prop discipline) and replaces the session
-    # persist().  Values are identical: truncate only materializes.
-    edges = truncate(mutual_knn_edges(emb, _KATZ_K))
-    nodes = truncate(emb.select(F.col("vec_id").alias("id")))
-    x = nodes.select("id", F.lit(1.0).alias("x"))
-    for _ in range(_KATZ_ITERS):
-        msg = (
-            edges.join(x, edges.dst == x.id)
-            .groupBy("src")
-            .agg(F.sum("x").alias("s"))
-        )
-        x = truncate(
-            nodes.join(msg, nodes.id == msg.src, "left")
-            .select(
-                "id",
-                (
-                    _KATZ_ALPHA * F.coalesce(F.col("s"), F.lit(0.0)) + 1.0
-                ).alias("x"),
-            )
-        )
+    x = graph.katz(
+        graph.mutual_knn_edges(emb, _KATZ_K),
+        emb.select(F.col("vec_id").alias("node")),
+        _KATZ_ALPHA,
+        _KATZ_ITERS,
+    )
     return x.select(
-        F.col("id").alias("vec_id"), F.round("x", 6).alias("katz")
+        F.col("node").alias("vec_id"), F.round("score", 6).alias("katz")
     ).orderBy("vec_id")
 
 

@@ -28,14 +28,15 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from arrow_supercluster_spark.operators import graph
 from arrow_supercluster_spark.plans.registry_core import register
 from arrow_supercluster_spark.plans.registry_ext import _emb
-from arrow_supercluster_spark.plans.registry_ext158 import mutual_knn_edges
 from arrow_supercluster_spark.sources.tables import read_events
 
 _PPR_D = 0.85
 _PPR_ITERS = 3
 _PPR_SEED_MOD = 17
+_PPR_SEEDS = f"node % {_PPR_SEED_MOD} = 0"  # the restart set
 _TH_K = 5
 
 # Shared kNN SQL fragment (the q_knn_accuracy / q_katz_centrality tie
@@ -65,56 +66,11 @@ _SQL_KNN = f"""
 # R507 — personalized PageRank
 # ===========================================================================
 
-def _ppr_iter_sql(prev: str, cur: str) -> str:
-    return f"""
-    {cur} AS (
-      SELECT nodes.node,
-             round((CAST(1.0 AS DOUBLE) - CAST({_PPR_D} AS DOUBLE))
-                   * CASE WHEN nodes.node % {_PPR_SEED_MOD} = 0
-                          THEN CAST(1.0 AS DOUBLE) / sstat.ns
-                          ELSE CAST(0.0 AS DOUBLE) END
-                   + CAST({_PPR_D} AS DOUBLE) * coalesce(c.inflow, 0.0),
-                   9) AS rank
-      FROM nodes CROSS JOIN sstat
-      LEFT JOIN (
-        SELECT e.dst AS node, SUM(r.rank / d.deg) AS inflow
-        FROM edges e JOIN deg d ON d.src = e.src
-                     JOIN {prev} r ON r.node = e.src
-        GROUP BY e.dst
-      ) c USING (node)
-    )"""
-
-
-_PPR_SQL = (
-    f"""
-    WITH edges AS (
-      SELECT DISTINCT a.user_id AS src, b.user_id AS dst
-      FROM events a JOIN events b
-        ON a.event_type = b.event_type
-       AND date_trunc('hour', a.ts) = date_trunc('hour', b.ts)
-       AND a.user_id <> b.user_id
-    ),
-    nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-    sstat AS (
-      SELECT CAST(COUNT(*) AS DOUBLE) AS ns FROM nodes
-      WHERE node % {_PPR_SEED_MOD} = 0
-    ),
-    deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src),
-    r0 AS (
-      SELECT nodes.node,
-             round(CASE WHEN nodes.node % {_PPR_SEED_MOD} = 0
-                        THEN CAST(1.0 AS DOUBLE) / sstat.ns
-                        ELSE CAST(0.0 AS DOUBLE) END, 9) AS rank
-      FROM nodes CROSS JOIN sstat
-    ),"""
-    + ",".join(
-        _ppr_iter_sql(f"r{i}", f"r{i + 1}") for i in range(_PPR_ITERS)
-    )
-    + f"""
+_PPR_SQL = f"""
+    WITH {graph.COOCCURRENCE_EDGES_SQL},{graph.pagerank_sql(_PPR_ITERS, _PPR_D, _PPR_SEEDS)}
     SELECT node, round(rank, 6) AS ppr FROM r{_PPR_ITERS}
     ORDER BY node
     """
-)
 
 
 @register("q_personalized_pagerank", _PPR_SQL)
@@ -129,60 +85,11 @@ def q_personalized_pagerank(spark, sf_dir):
     the identical rounds unrolled as generated CTEs.""".format(
         m=_PPR_SEED_MOD, it=_PPR_ITERS, d=_PPR_D
     )
-    ev = read_events(spark, sf_dir).select(
-        "user_id", "event_type", F.date_trunc("hour", "ts").alias("h")
+    edges = graph.cooccurrence_edges(read_events(spark, sf_dir))
+    ranks = graph.pagerank(
+        edges, iterations=_PPR_ITERS, damping=_PPR_D, restart=F.expr(_PPR_SEEDS)
     )
-    a = ev.select(F.col("user_id").alias("src"), "event_type", "h")
-    b = ev.select(F.col("user_id").alias("dst"), "event_type", "h")
-    from arrow_supercluster_spark.functions.checkpoint import truncate
-
-    # r10: the q_pagerank treatment — edges/nodes/deg materialized once
-    # (the loop re-ran the nodes distinct and the degree agg per round;
-    # truncate also replaces the session persist()).
-    edges = truncate(
-        a.join(b, ["event_type", "h"])
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
-    nodes = truncate(
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    ns = float(
-        nodes.filter(F.col("node") % _PPR_SEED_MOD == 0).count()
-    )
-    is_seed = F.col("node") % _PPR_SEED_MOD == 0
-    teleport = F.when(is_seed, F.lit(1.0) / ns).otherwise(F.lit(0.0))
-    deg = truncate(edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
-    ranks = nodes.select("node", F.round(teleport, 9).alias("rank"))
-    for _ in range(_PPR_ITERS):
-        contribs = (
-            edges.join(deg, "src")
-            .join(ranks, F.col("src") == F.col("node"))
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("rank") / F.col("deg")).alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .select(
-                "node",
-                F.round(
-                    (1.0 - _PPR_D) * teleport
-                    + _PPR_D * F.coalesce(F.col("inflow"), F.lit(0.0)),
-                    9,
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks.select(
-        "node", F.round("rank", 6).alias("ppr")
-    ).orderBy("node")
+    return ranks.select("node", F.col("rank").alias("ppr")).orderBy("node")
 
 
 # ===========================================================================
@@ -277,7 +184,7 @@ def q_two_hop(spark, sf_dir):
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
-    mut = mutual_knn_edges(emb, _TH_K).persist()
+    mut = graph.mutual_knn_edges(emb, _TH_K).persist()
     m1 = mut.select(F.col("src").alias("node"), F.col("dst").alias("mid"))
     m2 = mut.select(F.col("src").alias("mid"), F.col("dst").alias("hop2"))
     two = (

@@ -12,8 +12,6 @@ bigram language-model scoring, and triangle counting:
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from arrow_supercluster_spark.operators import decontam, graph, relevance
 from arrow_supercluster_spark.plans.registry_core import register
 from arrow_supercluster_spark.plans.registry_ext import SQL_TOKS, _docs
@@ -103,14 +101,8 @@ def q_bigram_lm(spark, sf_dir):
 
 @register(
     "q_triangle_count",
-    """
-    WITH edges AS (
-      SELECT DISTINCT a.user_id AS src, b.user_id AS dst
-      FROM events a JOIN events b
-        ON a.event_type = b.event_type
-       AND date_trunc('hour', a.ts) = date_trunc('hour', b.ts)
-       AND a.user_id <> b.user_id
-    ),
+    f"""
+    WITH {graph.COOCCURRENCE_EDGES_SQL},
     und AS (
       SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
       FROM edges WHERE src <> dst
@@ -136,15 +128,6 @@ def q_triangle_count(spark, sf_dir):
     triangle enumerated once via id-ordering (a < b < c). Completes the
     graph trio: components (connectivity), PageRank (centrality),
     triangles (cohesion)."""
-    ev = read_events(spark, sf_dir).select(
-        "user_id", "event_type", F.date_trunc("hour", "ts").alias("h")
+    return graph.triangle_counts(
+        graph.cooccurrence_edges(read_events(spark, sf_dir))
     )
-    a = ev.select(F.col("user_id").alias("src"), "event_type", "h")
-    b = ev.select(F.col("user_id").alias("dst"), "event_type", "h")
-    edges = (
-        a.join(b, ["event_type", "h"])
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
-    return graph.triangle_counts(edges)

@@ -28,9 +28,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from arrow_supercluster_spark.operators import graph
 from arrow_supercluster_spark.plans.registry_core import register
 from arrow_supercluster_spark.plans.registry_ext import _emb
-from arrow_supercluster_spark.plans.registry_ext158 import mutual_knn_edges
 
 _EC_ITERS = 12
 _EC_K = 5
@@ -106,34 +106,15 @@ def q_eigenvector_centrality(spark, sf_dir):
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
-    edges = mutual_knn_edges(emb, _EC_K).persist()
-    nodes = emb.select(F.col("vec_id").alias("id"))
-    x = nodes.select("id", F.lit(1.0).alias("x"))
-    for _ in range(_EC_ITERS):
-        msg = (
-            edges.join(x, edges.dst == x.id)
-            .groupBy("src")
-            .agg(F.sum("x").alias("s"))
-        )
-        y = nodes.join(msg, nodes.id == msg.src, "left").select(
-            "id", F.coalesce(F.col("s"), F.lit(0.0)).alias("y")
-        )
-        nrm = y.agg(F.sqrt(F.sum(F.col("y") * F.col("y"))).alias("s"))
-        x = y.crossJoin(F.broadcast(nrm)).select(
-            "id",
-            F.when(F.col("s") > 0, F.col("y") / F.col("s"))
-            .otherwise(0.0)
-            .alias("x"),
-        )
-        # the norm makes x reference y twice; without an eager cut the
-        # logical plan doubles per iteration (2^12 by the last step)
-        x = x.localCheckpoint(eager=True)
-    out = x.select(
-        F.col("id").alias("vec_id"), F.round("x", 6).alias("eigencentrality")
+    x = graph.eigenvector_centrality(
+        graph.mutual_knn_edges(emb, _EC_K),
+        emb.select(F.col("vec_id").alias("node")),
+        _EC_ITERS,
+    )
+    return x.select(
+        F.col("node").alias("vec_id"),
+        F.round("score", 6).alias("eigencentrality"),
     ).orderBy("vec_id")
-    out = out.localCheckpoint()  # cut the 12-join lineage
-    edges.unpersist()
-    return out
 
 
 @register(
@@ -224,7 +205,7 @@ def q_transitivity(spark, sf_dir):
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
-    mut = mutual_knn_edges(emb, _EC_K)
+    mut = graph.mutual_knn_edges(emb, _EC_K)
     und = (
         mut.select(
             F.least("src", "dst").alias("u"),

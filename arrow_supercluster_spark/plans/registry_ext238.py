@@ -39,6 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from arrow_supercluster_spark.functions.checkpoint import truncate
 from arrow_supercluster_spark.plans.registry_core import register
 from arrow_supercluster_spark.plans.registry_ext import SQL_TOKS, _docs
 from arrow_supercluster_spark.sources.tables import read_events
@@ -122,9 +123,7 @@ def q_beam_search_bigram(spark, sf_dir):
         .select(F.explode(adj).alias("p"))
         .select("p.w1", "p.w2")
     )
-    bigrams = pairs.groupBy("w1", "w2").agg(
-        F.count(F.lit(1)).alias("c")
-    ).persist()
+    bigrams = truncate(pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c")))
     seed = (
         bigrams.groupBy("w1")
         .agg(F.sum("c").alias("n"))
@@ -204,11 +203,13 @@ def q_crdt_gcounter(spark, sf_dir):
     replica the other lost."""
     ev = read_events(spark, sf_dir).select("event_id", "event_type")
     h = F.pmod(F.lit(48271) * F.col("event_id") + 11, F.lit(_P))
-    incs = ev.select(
-        F.col("event_type").alias("key"),
-        F.pmod(h, F.lit(_CRDT_N)).alias("replica"),
-        F.pmod(h, F.lit(7)).alias("slice"),
-    ).persist()
+    incs = truncate(
+        ev.select(
+            F.col("event_type").alias("key"),
+            F.pmod(h, F.lit(_CRDT_N)).alias("replica"),
+            F.pmod(h, F.lit(7)).alias("slice"),
+        )
+    )
 
     def state(df):
         return df.groupBy("key", "replica").agg(

@@ -27,14 +27,7 @@ from arrow_supercluster_spark.sources.tables import read_events
 
 _LP_ITERS = 3
 
-_SQL_LP_EDGES = """
-    edges AS (
-      SELECT DISTINCT a.user_id AS src, b.user_id AS dst
-      FROM events a JOIN events b
-        ON a.event_type = b.event_type
-       AND date_trunc('hour', a.ts) = date_trunc('hour', b.ts)
-       AND a.user_id <> b.user_id
-    ),
+_SQL_LP_EDGES = f"""{graph.COOCCURRENCE_EDGES_SQL},
     nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
     l0 AS (SELECT node, node AS label FROM nodes)
 """
@@ -79,17 +72,7 @@ def q_label_prop(spark, sf_dir):
     degree-bounded window; labels stay |nodes|-sized; localCheckpoint
     keeps lineage O(1). Oracle unrolls the same three rounds as chained
     CTEs — the whole adoption algebra is differentially checked."""
-    ev = read_events(spark, sf_dir).select(
-        "user_id", "event_type", F.date_trunc("hour", "ts").alias("h")
-    )
-    a = ev.select(F.col("user_id").alias("src"), "event_type", "h")
-    b = ev.select(F.col("user_id").alias("dst"), "event_type", "h")
-    edges = (
-        a.join(b, ["event_type", "h"])
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
+    edges = graph.cooccurrence_edges(read_events(spark, sf_dir))
     return graph.label_propagation(edges, iterations=_LP_ITERS)
 
 

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from arrow_supercluster_spark.operators import graph
 from arrow_supercluster_spark.plans.registry_core import register
 from arrow_supercluster_spark.sources.tables import read_events
 
@@ -25,14 +26,7 @@ from arrow_supercluster_spark.sources.tables import read_events
 _BFS_MAX_HOPS = 3
 _BFS_SOURCES = "node % 50 = 0"  # deterministic seed set
 
-_SQL_BFS_EDGES = """
-    edges AS (
-      SELECT DISTINCT a.user_id AS src, b.user_id AS dst
-      FROM events a JOIN events b
-        ON a.event_type = b.event_type
-       AND date_trunc('hour', a.ts) = date_trunc('hour', b.ts)
-       AND a.user_id <> b.user_id
-    ),
+_SQL_BFS_EDGES = f"""{graph.COOCCURRENCE_EDGES_SQL},
     nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges)
 """
 
@@ -60,23 +54,10 @@ def q_bfs_hops(spark, sf_dir):
     frontiers stay |nodes|-bounded, the driver only counts rounds.
     Oracle: recursive CTE minimizing hops — a different evaluation
     strategy for the same fixpoint.""".format(h=_BFS_MAX_HOPS)
-    ev = read_events(spark, sf_dir).select(
-        "user_id", "event_type", F.date_trunc("hour", "ts").alias("h")
+    edges = graph.cooccurrence_edges(read_events(spark, sf_dir)).localCheckpoint(
+        eager=False
     )
-    a = ev.select(F.col("user_id").alias("src"), "event_type", "h")
-    b = ev.select(F.col("user_id").alias("dst"), "event_type", "h")
-    edges = (
-        a.join(b, ["event_type", "h"])
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    nodes = graph.node_set(edges)
     dist = nodes.filter(F.expr(_BFS_SOURCES)).select(
         "node", F.lit(0).alias("hops")
     )

@@ -18,14 +18,7 @@ from arrow_supercluster_spark.operators import graph, similarity
 from arrow_supercluster_spark.plans.registry_core import register
 from arrow_supercluster_spark.sources.tables import read_events
 
-_SQL_UND = """
-    edges AS (
-      SELECT DISTINCT a.user_id AS src, b.user_id AS dst
-      FROM events a JOIN events b
-        ON a.event_type = b.event_type
-       AND date_trunc('hour', a.ts) = date_trunc('hour', b.ts)
-       AND a.user_id <> b.user_id
-    ),
+_SQL_UND = f"""{graph.COOCCURRENCE_EDGES_SQL},
     und AS (
       SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
       FROM edges
@@ -34,17 +27,9 @@ _SQL_UND = """
 
 
 def _spark_undirected(spark, sf_dir):
-    ev = read_events(spark, sf_dir).select(
-        "user_id", "event_type", F.date_trunc("hour", "ts").alias("h")
-    )
-    a = ev.select(F.col("user_id").alias("src"), "event_type", "h")
-    b = ev.select(F.col("user_id").alias("dst"), "event_type", "h")
-    return (
-        a.join(b, ["event_type", "h"])
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
+    return graph.undirected_edges(
+        graph.cooccurrence_edges(read_events(spark, sf_dir))
+    ).localCheckpoint(eager=False)
 
 
 @register(
@@ -90,14 +75,7 @@ def q_clustering_coeff(spark, sf_dir):
     q_triangle_count's raw counts). Triangle enumeration is the same
     two-equi-join + closing-semi-join plan; degrees are one agg;
     the division is a |nodes|-row projection."""
-    und = (
-        _spark_undirected(spark, sf_dir)
-        .select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    und = _spark_undirected(spark, sf_dir)
     deg = (
         und.select(F.col("u").alias("node"))
         .unionByName(und.select(F.col("v").alias("node")))
@@ -153,14 +131,7 @@ def q_degree_assortativity(spark, sf_dir):
     positive: hubs attach to hubs; negative: hub-and-spoke. One degree
     agg broadcast onto the edges, then a single correlation aggregate;
     rounded to 6 (moment summation order)."""
-    und = (
-        _spark_undirected(spark, sf_dir)
-        .select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    und = _spark_undirected(spark, sf_dir)
     deg = (
         und.select(F.col("u").alias("node"))
         .unionByName(und.select(F.col("v").alias("node")))

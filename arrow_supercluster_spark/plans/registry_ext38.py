@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from arrow_supercluster_spark.operators import graph
 from arrow_supercluster_spark.plans.registry_core import register
 from arrow_supercluster_spark.sources.tables import read_events
 
@@ -23,15 +24,9 @@ from arrow_supercluster_spark.sources.tables import read_events
 
 _HITS_ITERS = 3
 
-_SQL_HITS_EDGES = """
-    edges AS (
-      SELECT DISTINCT a.user_id AS src, b.user_id AS dst
-      FROM events a JOIN events b
-        ON a.event_type = b.event_type
-       AND date_trunc('hour', a.ts) = date_trunc('hour', b.ts)
-       AND a.user_id < b.user_id
-    ),
-    nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges)
+_SQL_HITS_EDGES = f"""{graph.COOCCURRENCE_EDGES_SQL},
+    dedges AS (SELECT src, dst FROM edges WHERE src < dst),
+    nodes AS (SELECT src AS node FROM dedges UNION SELECT dst FROM dedges)
 """
 
 
@@ -40,7 +35,7 @@ def _sql_hits_iter(prev_h: str, prev_a: str, i: int) -> str:
     ra{i} AS (
       SELECT n.node, coalesce(SUM(h.score), 0.0) AS s
       FROM nodes n
-      LEFT JOIN edges e ON e.dst = n.node
+      LEFT JOIN dedges e ON e.dst = n.node
       LEFT JOIN {prev_h} h ON h.node = e.src
       GROUP BY n.node
     ),
@@ -52,7 +47,7 @@ def _sql_hits_iter(prev_h: str, prev_a: str, i: int) -> str:
     rh{i} AS (
       SELECT n.node, coalesce(SUM(a.score), 0.0) AS s
       FROM nodes n
-      LEFT JOIN edges e ON e.src = n.node
+      LEFT JOIN dedges e ON e.src = n.node
       LEFT JOIN a{i} a ON a.node = e.dst
       GROUP BY n.node
     ),
@@ -88,71 +83,13 @@ def q_hits(spark, sf_dir):
     L2 norm — the PageRank loop with two interleaved score vectors.
     Scores re-round to 9 per half-round (summation-order discipline);
     the oracle unrolls all six half-rounds as CTEs."""
-    ev = read_events(spark, sf_dir).select(
-        "user_id", "event_type", F.date_trunc("hour", "ts").alias("h")
+    edges = graph.cooccurrence_edges(read_events(spark, sf_dir)).filter(
+        F.col("src") < F.col("dst")
     )
-    a_side = ev.select(F.col("user_id").alias("src"), "event_type", "h")
-    b_side = ev.select(F.col("user_id").alias("dst"), "event_type", "h")
-    from arrow_supercluster_spark.functions.checkpoint import truncate
-
-    # r10: edges and nodes materialized once — the six half-rounds each
-    # re-joined `nodes`, whose unmaterialized distinct re-ran the
-    # co-occurrence self-join per half-round.
-    edges = truncate(
-        a_side.join(b_side, ["event_type", "h"])
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
-    nodes = truncate(
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    hub = nodes.withColumn("score", F.lit(1.0))
-    auth = nodes.withColumn("score", F.lit(1.0))
-
-    def _normalize(scored):
-        nrm = scored.agg(
-            F.round(F.sqrt(F.sum(F.col("s") * F.col("s"))), 9).alias("nrm")
-        )
-        return scored.crossJoin(F.broadcast(nrm)).select(
-            "node",
-            F.when(F.col("nrm") > 0, F.round(F.col("s") / F.col("nrm"), 9))
-            .otherwise(F.lit(0.0))
-            .alias("score"),
-        )
-
-    for _ in range(_HITS_ITERS):
-        ra = (
-            nodes.join(edges, edges.dst == nodes.node, "left")
-            .join(
-                hub.select(F.col("node").alias("hn"), F.col("score").alias("hs")),
-                F.col("src") == F.col("hn"),
-                "left",
-            )
-            .groupBy(nodes.node)
-            .agg(F.coalesce(F.sum("hs"), F.lit(0.0)).alias("s"))
-        )
-        auth = _normalize(ra).localCheckpoint(eager=False)
-        rh = (
-            nodes.join(edges, edges.src == nodes.node, "left")
-            .join(
-                auth.select(F.col("node").alias("an"), F.col("score").alias("as_")),
-                F.col("dst") == F.col("an"),
-                "left",
-            )
-            .groupBy(nodes.node)
-            .agg(F.coalesce(F.sum("as_"), F.lit(0.0)).alias("s"))
-        )
-        hub = _normalize(rh).localCheckpoint(eager=False)
-    return (
-        hub.select("node", F.round("score", 6).alias("hub"))
-        .join(
-            auth.select(F.col("node").alias("n2"), F.round("score", 6).alias("authority")),
-            F.col("node") == F.col("n2"),
-        )
-        .select("node", "hub", "authority")
+    return graph.hits(edges, _HITS_ITERS).select(
+        "node",
+        F.round("hub", 6).alias("hub"),
+        F.round("authority", 6).alias("authority"),
     )
 
 

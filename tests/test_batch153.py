@@ -6,11 +6,11 @@ import numpy as np
 
 
 def test_katz_matches_python_iteration(spark, sf_dir):
+    from arrow_supercluster_spark.operators.graph import mutual_knn_edges
     from arrow_supercluster_spark.plans.registry_ext158 import (
         _KATZ_ALPHA,
         _KATZ_ITERS,
         _KATZ_K,
-        mutual_knn_edges,
         q_katz_centrality,
     )
     from pyspark.sql import functions as F

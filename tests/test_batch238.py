@@ -75,3 +75,14 @@ def test_quorum_staleness_median_bounds(spark, sf_dir):
         assert 0 <= r.min_ms <= r.max_ms <= 199
         assert r.min_ms <= r.mean_ms <= r.max_ms
         assert 0 <= r.stale_over_100ms <= r.n_writes
+
+
+def test_beam_and_crdt_leave_no_session_cache(spark, sf_dir):
+    """Neither query leaves a cached relation in the session: their
+    shared intermediates are checkpointed, not persisted."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    for name in ("q_beam_search_bigram", "q_crdt_gcounter"):
+        spark.catalog.clearCache()
+        assert cache.isEmpty()
+        assert REGISTRY[name].spark(spark, sf_dir).collect()
+        assert cache.isEmpty(), name
